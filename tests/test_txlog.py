@@ -297,6 +297,63 @@ def test_read_changes_drives_incremental_aggregate_maintenance(
     assert maintained == full
 
 
+def test_keyed_dml_spark_job_counts(spark, tmp_path):
+    """Spark jobs per keyed DML call, pinned: each one is a driver-
+    synchronous round trip on the write path, so a refactor that adds
+    one shows up here before it shows up in pipeline latency. Batches
+    have a fixed partition count, so ``limit`` collects scan the same
+    partitions at any session parallelism (counts are identical at any
+    local[N]); the
+    table is 4 contiguous-key files, so every planner stat-prunes to
+    one candidate. Job groups are thread-local, so concurrently pooled
+    test bodies never leak into a group."""
+    sc = spark.sparkContext
+
+    def kv(lo, hi, mul=2, parts=2):
+        return spark.range(lo, hi, 1, parts).selectExpr(
+            "id as k", f"id*{mul} as v")
+
+    def jobs(name, call):
+        t = TxTable.create(spark, kv(0, 1000, parts=4),
+                           str(tmp_path / name), stat_cols=["k"])
+        assert len(t.live_files()) == 4
+        sc.setJobGroup(name, name)
+        try:
+            call(t)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    def tag(df, change):
+        return df.withColumn("_change_type", F.lit(change))
+
+    feed = tag(kv(10, 20, mul=3), "insert").unionByName(
+        tag(kv(10, 20), "delete"))
+    counts = {
+        "merge_insert_only": jobs(
+            "merge_insert_only",
+            lambda t: t.merge_upsert(kv(995, 1010), ["k"])),
+        "merge_update": jobs(
+            "merge_update",
+            lambda t: t.merge_upsert(kv(10, 20, mul=3), ["k"],
+                                     update=True)),
+        "delete_cow": jobs(
+            "delete_cow", lambda t: t.delete(kv(10, 20).select("k"), ["k"])),
+        "apply_changes": jobs(
+            "apply_changes", lambda t: t.apply_changes(feed, ["k"])),
+        "apply_delta": jobs(
+            "apply_delta",
+            lambda t: t.apply_delta([(["k"], kv(10, 20).select("k"))],
+                                    kv(10, 20, mul=3))),
+        "read_keys_count": jobs(
+            "read_keys_count",
+            lambda t: t.read_keys(kv(10, 20).select("k"), ["k"]).count()),
+    }
+    assert counts == {"merge_insert_only": 8, "merge_update": 10,
+                      "delete_cow": 10, "apply_changes": 18,
+                      "apply_delta": 11, "read_keys_count": 3}
+
+
 def test_update_rewrites_only_matching_files_and_cdc_nets_changed_rows(
         spark, tmp_path):
     """UPDATE: SQL-expression assignments applied to condition-matching
