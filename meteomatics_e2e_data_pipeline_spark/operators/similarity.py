@@ -1169,12 +1169,20 @@ def mmr_rerank(cands: DataFrame, psim: DataFrame, k: int,
             f"contract — rerank a first-stage top-k, not a corpus")
     rel = {r[id_col]: r[rel_col] for r in crows
            if r[rel_col] is not None}
+    # The pair side has the same contract: at most one row per ordered
+    # candidate pair. A wider frame raises instead of being truncated
+    # (a dropped pair would silently change the selection).
+    max_pairs = MMR_MAX_CANDS * MMR_MAX_CANDS
+    prows = psim.select("id_a", "id_b", "sim").limit(max_pairs + 1).collect()
+    if len(prows) > max_pairs:
+        raise ValueError(
+            f"mmr_rerank pair list exceeds MMR_MAX_CANDS**2 ({max_pairs}) "
+            f"rows: pass the similarities among the candidates only")
     sims: dict = {}
     # None sims are skipped, matching the old unrolled plan's F.max
     # (which ignores NULLs) — a NULL sim (zero-norm vector) can then
     # never crash the fold or win a max.
-    for r in psim.select("id_a", "id_b", "sim") \
-            .limit(MMR_MAX_CANDS * MMR_MAX_CANDS).collect():
+    for r in prows:
         if r["sim"] is not None:
             sims.setdefault(r["id_a"], {})[r["id_b"]] = r["sim"]
     sel: list = []  # [(id, rel, maxred_at_selection | None)]

@@ -22,9 +22,17 @@ pipeline needs:
   collision files and rescanning years of history; the log itself stays
   driver-sized (one small JSON line per file, exactly like Delta's
   driver-held snapshot).
-* ``merge_upsert(update=False)`` is the reference's first-writer-wins
-  insert-only MERGE; ``update=True`` is last-wins copy-on-write (rewrites
-  only the files that actually hold colliding keys).
+* One keyed copy-on-write planner (``TxTable._keyed_rewrite``) serves
+  ``merge_upsert(update=True)`` (last-wins MERGE), ``delete(mode="cow")``,
+  ``apply_changes`` (CDC replication) and ``apply_delta`` (streaming state
+  maintenance): per ``(key_cols, probe)`` clause it prunes the live set
+  (key bounds → generated-column bounds → stats → bloom), probes the
+  candidates with an exact semi-join, then rewrites only the files that
+  really hold a probed key — anti-joined, unioned with the inserts, staged
+  and published in one commit under one key-range conflict validator.
+  ``merge_upsert(update=False)`` (the reference's first-writer-wins
+  insert-only MERGE), ``read_keys`` and ``delete(mode="dv")`` reuse its
+  prune step (and dv its probe).
 * Removed files stay on disk so every historical version remains readable
   (time travel); ``vacuum()`` explicitly deletes files unreferenced by the
   current version.
@@ -64,14 +72,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from .genexpr import parse_generation_expr
-from .txproto import (BASE_PROTOCOL, COLMAP_PROTOCOL, PARTITION_PROTOCOL,
+from .txproto import (BASE_PROTOCOL, COLMAP_PROTOCOL, DV_PROTOCOL,
+                      PARTITION_PROTOCOL,
                       SUPPORTED_READER,
                       SUPPORTED_WRITER, TxCorruption, TxProtocolError,
                       WRITE_FEATURES_PROTOCOL,
                       canon_temporal as _canon,
                       check_protocol, commit_payload,
                       info_action as _info_action,
-                      merged_protocol, needs_upgrade,
+                      merge_dv, merged_protocol, needs_upgrade,
                       parse_partition_values as _parse_partition_values,
                       parse_commit_lines, protocol_action, repair_payload,
                       unquote_path as _unq)
@@ -187,23 +196,6 @@ def _colmap_inverse(meta: dict) -> dict | None:
     if not cm:
         return None
     return {p: l for l, p in cm.items()}
-
-
-def _merge_dv(cur: dict | None, new: dict) -> dict:
-    """Union two deletion-vector key sets for one file (same keyCols —
-    enforced at commit; a second delete of an already-tombstoned key is
-    deduplicated so CDC never double-emits it)."""
-    if cur is None:
-        return {"keyCols": list(new["keyCols"]),
-                "keys": [list(k) for k in new["keys"]]}
-    if list(cur["keyCols"]) != list(new["keyCols"]):
-        raise ValueError(
-            f"deletion vectors on one file must share key columns "
-            f"({cur['keyCols']} vs {new['keyCols']})")
-    seen = {tuple(k) for k in cur["keys"]}
-    merged = [list(k) for k in cur["keys"]]
-    merged += [list(k) for k in new["keys"] if tuple(k) not in seen]
-    return {"keyCols": list(cur["keyCols"]), "keys": merged}
 
 
 def _dv_minus(cur: dict | None, sub: dict | None) -> list[list]:
@@ -540,7 +532,7 @@ class TxTable:
                     cur = live.get(d["path"])
                     if cur is not None:
                         live[d["path"]] = {
-                            **cur, "dv": _merge_dv(cur.get("dv"), d)}
+                            **cur, "dv": merge_dv(cur.get("dv"), d)}
                 elif "protocol" in action:
                     proto = action["protocol"]
         # The protocol gate: checked on EVERY fold (reads and the read
@@ -676,7 +668,7 @@ class TxTable:
                         f"the new snapshot of {self.path}")
                 # a concurrent DV on the same file with DIFFERENT key
                 # columns would make the folded tombstone set unmergeable
-                # (one keyed set per file — _merge_dv); publishing on top
+                # (one keyed set per file — merge_dv); publishing on top
                 # would brick every later fold, so conflict instead.
                 keycol_clash = sorted(
                     a["dv"]["path"] for a in intervening
@@ -767,38 +759,41 @@ class TxTable:
                 return published
 
     # ------------------------------------------------------------- data files
-    def _stage(self, df: DataFrame, stat_cols: Sequence[str],
-               data_change: bool = True,
-               bloom: dict | None = None,
-               constraints: dict | None = None,
-               partition_cols: Sequence[str] = (),
-               colmap: dict | None = None) -> list[dict]:
+    def _stage(self, df: DataFrame, meta: dict,
+               data_change: bool = True) -> list[dict]:
         """Write ``df`` as immutable parquet files in the table root and
-        return their ``add`` actions (with per-file min/max stats).
+        return their ``add`` actions, laid out as ``meta`` declares:
+        per-file min/max stats for its ``stat_cols``, bloom bitsets, the
+        CHECK set of :meth:`_write_constraints`, partition directories
+        and physical column names.
 
         ``data_change=False`` tags the adds as layout-only (compaction):
         change-feed readers skip them. Absent means true, so logs written
         before this flag existed keep their meaning.
 
-        ``partition_cols``: hive-partitioned staging — files land under
-        their ``key=value/`` subpaths (the partition columns are NOT in
-        the file data, Spark's own ``partitionBy`` layout), the add
-        actions carry ``path`` = relative path and typed
-        ``partitionValues`` (the public Delta add-action shape), and
-        :meth:`_overlaps` treats those values as exact stats.
+        Partitioned tables stage hive-style — files land under their
+        ``key=value/`` subpaths (the partition columns are NOT in the
+        file data, Spark's own ``partitionBy`` layout), the add actions
+        carry ``path`` = relative path and typed ``partitionValues``
+        (the public Delta add-action shape), and :meth:`_overlaps`
+        treats those values as exact stats.
 
-        ``colmap``: column-mapped staging — the batch arrives in LOGICAL
-        names (every caller conforms it first); files are written under
-        the stable PHYSICAL names and the add actions key stats/bloom by
-        them, so a later rename is pure metadata. The stats/constraint
-        pass itself runs in logical space (constraint expressions are
-        written over logical names).
+        Column-mapped tables: the batch arrives in LOGICAL names (every
+        caller conforms it first); files are written under the stable
+        PHYSICAL names and the add actions key stats/bloom by them, so a
+        later rename is pure metadata. The stats/constraint pass itself
+        runs in logical space (constraint expressions are written over
+        logical names).
 
         The staged write and the stats pass are Spark jobs; only one stat
         row *per file* reaches the driver."""
+        stat_cols = meta.get("stat_cols", [])
+        bloom = meta.get("bloom")
+        constraints = self._write_constraints(meta)
+        colmap = meta.get("column_mapping")
         tag = uuid.uuid4().hex[:12]
         staged = f"{self.path}/_staged_{tag}"
-        pcols = list(partition_cols or ())
+        pcols = list(meta.get("partition_cols") or ())
         to_phys = (colmap or {}).get
         phys_df = (df.select(*[F.col(c).alias(to_phys(c, c))
                                for c in df.columns]) if colmap else df)
@@ -1045,9 +1040,7 @@ class TxTable:
         if gen or ident or str((properties or {}).get(
                 "appendOnly", "")).lower() in ("true", "1"):
             proto = merged_protocol(proto, WRITE_FEATURES_PROTOCOL)
-        adds = t._stage(df, stat_cols, bloom=bloom,
-                        constraints=t._write_constraints(meta),
-                        partition_cols=pcols)
+        adds = t._stage(df, meta)
         meta = t._identity_meta(meta, adds) or meta
         actions = [protocol_action(proto), {"meta": meta}]
         actions += adds
@@ -1566,6 +1559,20 @@ class TxTable:
         m2 = dict(meta)
         m2["identity"] = new
         return m2
+
+    def _stage_rows(self, df: DataFrame | None, meta: dict,
+                    meta_changed: bool = False) -> tuple[list, list]:
+        """Stage ``df`` (None stages nothing) for a row-writing commit:
+        ``(meta actions, adds)``. The meta action carries a schema
+        change (``meta_changed``) and the identity high-water mark the
+        adds advanced — in the SAME commit, so the MetadataChanged rule
+        (this commit stages rows, a concurrent one carries meta) turns a
+        concurrent allocation race into a TxConflict instead of
+        duplicate ids."""
+        adds = [] if df is None else self._stage(df, meta)
+        id_meta = self._identity_meta(meta, adds)
+        return ([{"meta": id_meta or meta}] if (id_meta or meta_changed)
+                else []), adds
 
     def alter_properties(self, set_props: dict | None = None,
                          unset: Sequence[str] = ()) -> int:
@@ -2184,14 +2191,11 @@ class TxTable:
                       for k in keys}
             probe_rows = rows
         else:
-            _n, bounds = self._batch_bounds(probe, keys)
-            probe_rows = None  # bulk regime: bloom pruning opts out
-        pkeys, pbounds = self._extend_generated_bounds(meta, keys, bounds)
-        cand = self._candidate_files(live, pkeys, pbounds)
+            # bulk regime: scalar-agg bounds, bloom pruning opts out
+            bounds = probe_rows = None
         # in the point regime probe_rows short-circuits the bloom
         # probe's own collect, so the DataFrame arg is never touched
-        cand = self._bloom_candidates(cand, live, keys, probe, meta,
-                                      probe_rows=probe_rows)
+        _, cand = self._prune(meta, live, keys, probe, bounds, probe_rows)
         if not cand:
             return self.spark.createDataFrame([], schema)
         scan = self._scan_files(meta, cand, dvs=self._live_dvs(live))
@@ -2328,7 +2332,7 @@ class TxTable:
                         dv_dels.append((era, d["path"],
                                         {"keyCols": list(d["keyCols"]),
                                          "keys": fresh}))
-                    dv_state[d["path"]] = _merge_dv(cur, d)
+                    dv_state[d["path"]] = merge_dv(cur, d)
         # Net per path by MULTISET count, not set intersection: RESTORE
         # re-adds a previously removed path, so a window spanning
         # add(v1) -> delete(v2) -> restore-re-add(v3) has unbalanced
@@ -2471,7 +2475,7 @@ class TxTable:
                         dv_dels.append((d["path"],
                                         {"keyCols": list(d["keyCols"]),
                                          "keys": fresh}))
-                    dv_state[d["path"]] = _merge_dv(cur, d)
+                    dv_state[d["path"]] = merge_dv(cur, d)
             m_i = era_meta(era)
             ins = (self._scan_files(m_i, sorted(adds_i)).select(*cols)
                    if adds_i else None)
@@ -2638,19 +2642,8 @@ class TxTable:
         else:
             df = self._check_schema(df)
             new_meta = None
-        adds = self._stage(df, meta.get("stat_cols", []),
-                           bloom=meta.get("bloom"),
-                           constraints=self._write_constraints(meta),
-                           partition_cols=meta.get("partition_cols"),
-                           colmap=meta.get("column_mapping"))
-        # identity appends carry the advanced high-water mark in the
-        # SAME commit; the MetadataChanged rule (this commit stages
-        # rows, the concurrent one carries meta) turns a concurrent
-        # allocation race into a TxConflict instead of duplicate ids
-        id_meta = self._identity_meta(meta, adds)
-        meta = id_meta or meta
-        actions = ([{"meta": meta}] if (new_meta or id_meta) else [])
-        actions += adds
+        meta_actions, adds = self._stage_rows(df, meta, new_meta is not None)
+        actions = meta_actions + adds
         if not actions:
             return self.version
 
@@ -2676,27 +2669,15 @@ class TxTable:
         txn action rides in the same atomic commit as the data."""
         rv, meta, live = self._snapshot()
         self._require_mutable(meta, "overwrite")
-        if txn is not None:
-            app, ver = txn
-            last = self._fold_txns(rv).get(app)
-            if last is not None and last >= ver:
-                return self.version  # replayed batch: already applied
+        if self._replayed(rv, txn):
+            return self.version  # replayed batch: already applied
         df = self._apply_generated(df, meta)
         df = self._assign_identity(df, meta)
-        actions = [{"remove": {"path": p}} for p in sorted(live)]
-        adds = self._stage(self._check_schema(df),
-                           meta.get("stat_cols", []),
-                           bloom=meta.get("bloom"),
-                           constraints=self._write_constraints(meta),
-                           partition_cols=meta.get("partition_cols"),
-                           colmap=meta.get("column_mapping"))
-        id_meta = self._identity_meta(meta, adds)
-        if id_meta:
-            actions.append({"meta": id_meta})
-        actions += adds
+        meta_actions, adds = self._stage_rows(self._check_schema(df), meta)
+        actions = (meta_actions + [{"remove": {"path": p}}
+                                   for p in sorted(live)] + adds)
         if txn is not None:
-            actions.append({"txn": {"appId": txn[0],
-                                    "version": int(txn[1])}})
+            actions.append(self._txn_action(txn))
 
         def no_concurrency(intervening):
             if intervening:
@@ -2753,11 +2734,7 @@ class TxTable:
 
         targets = sorted(p for p, a in live.items() if in_target(a))
         actions = [{"remove": {"path": p}} for p in targets]
-        actions += self._stage(df, meta.get("stat_cols", []),
-                               bloom=meta.get("bloom"),
-                               constraints=self._write_constraints(meta),
-                               partition_cols=pcols,
-                               colmap=meta.get("column_mapping"))
+        actions += self._stage(df, meta)
 
         def no_target_writes(intervening):
             for a in intervening:
@@ -2893,8 +2870,9 @@ class TxTable:
         ``partitionValues`` participate as EXACT single-value stats
         (min = max = the value), so partition pruning happens before —
         and through exactly the same machinery as — stat pruning, in
-        every planner that calls this (merge/delete/apply_changes/
-        read_keys and their conflict validators)."""
+        every planner that calls this (the shared prune step
+        :meth:`_prune` behind merge/delete/apply_changes/apply_delta/
+        read_keys, and :meth:`_key_range_validator`)."""
         stats = add.get("stats") or {}
         pv = add.get("partitionValues") or {}
         for k in keys:
@@ -2919,16 +2897,6 @@ class TxTable:
                 return False
         return True
 
-    @staticmethod
-    def _add_logical(meta: dict, add: dict) -> dict:
-        """Translate one RAW add action (an intervening commit's, seen
-        by a conflict validator) into the snapshot's logical name space
-        — identity for unmapped tables. The folded ``live`` set is
-        already translated by :meth:`_snapshot`; only actions read
-        straight off commit files need this."""
-        inv = _colmap_inverse(meta)
-        return _add_to_logical(inv, add) if inv else add
-
     def _candidate_files(self, live: dict[str, dict], keys: Sequence[str],
                          bounds: dict) -> list[str]:
         """Files whose per-key stat ranges overlap the batch's key ranges.
@@ -2937,6 +2905,165 @@ class TxTable:
         design)."""
         return sorted(p for p, add in live.items()
                       if self._overlaps(add, keys, bounds))
+
+    def _prune(self, meta: dict, live: dict[str, dict], keys: list[str],
+               probe: DataFrame | None, bounds: dict | None = None,
+               probe_rows=None) -> tuple[list, list[str]]:
+        """The prune step every keyed planner shares: the probe's key
+        bounds (one scalar agg, unless the caller already holds them),
+        extended to GENERATED partition columns, then stat/partition
+        pruning (:meth:`_candidate_files`) and bloom pruning
+        (:meth:`_bloom_candidates`). Returns ``(ranges, candidates)``;
+        ``ranges`` is ``[(keys, bounds)]`` for
+        :meth:`_key_range_validator`, or empty (and so are the
+        candidates) when the probe is empty — it can neither match nor
+        conflict."""
+        if bounds is None:
+            n, bounds = self._batch_bounds(probe, keys)
+            if n == 0:
+                return [], []
+        pkeys, pbounds = self._extend_generated_bounds(meta, keys, bounds)
+        cand = self._candidate_files(live, pkeys, pbounds)
+        cand = self._bloom_candidates(cand, live, keys, probe, meta,
+                                      probe_rows=probe_rows)
+        return [(pkeys, pbounds)], cand
+
+    def _probe(self, meta: dict, live: dict[str, dict], cand: list[str],
+               keys: list[str], probe: DataFrame):
+        """The exact probe step: ``(_file, *keys)`` rows of the candidate
+        files whose key tuple ``probe`` holds (a left semi-join; AQE
+        broadcasts the probe when it is small — the common MERGE shape —
+        and no hint is forced, since a bulk backfill can exceed the
+        broadcast limit), plus the resolver from a scanned ``_file``
+        value back to its live-set path."""
+        resolve = self._path_resolver(
+            cand, len(meta.get("partition_cols") or ()))
+        matched = (self._scan_files(meta, cand, with_file=True,
+                                    dvs=self._live_dvs(live))
+                   .select("_file", *keys)
+                   .join(probe, on=keys, how="left_semi"))
+        return matched, resolve
+
+    def _key_range_validator(self, op: str, meta: dict, ranges: list,
+                             extra: Sequence = ()):
+        """The conflict rule of every keyed planner: a concurrent commit
+        that ADDED a file whose stat range overlaps any of the plan's
+        ``(keys, bounds)`` ranges may have inserted one of the probed
+        keys, so the plan's match and anti-join decisions are stale.
+        Conservative (stat grain) but never silent: the caller re-runs.
+        ``extra`` validators (schema widening) run after it.
+
+        Intervening adds are read raw off the commit files, so on a
+        column-mapped table their stats translate to logical names
+        first (the folded ``live`` set already is)."""
+        inv = _colmap_inverse(meta)
+
+        def validate(intervening):
+            for a in intervening:
+                if "add" not in a:
+                    continue
+                add = _add_to_logical(inv, a["add"]) if inv else a["add"]
+                if any(self._overlaps(add, k, b) for k, b in ranges):
+                    raise TxConflict(
+                        f"concurrent commit added keys overlapping this "
+                        f"{op}'s key range on {self.path}; re-run the "
+                        f"{op} on the new snapshot")
+            for v in extra:
+                v(intervening)
+        return validate
+
+    def _replayed(self, rv: int, txn: tuple[str, int] | None) -> bool:
+        """The idempotent-replay guard of every ``txn``-taking writer
+        (the Delta ``txn``-action pattern, same ledger as the streaming
+        sink): True when the snapshot at ``rv`` already records ``txn``'s
+        app at or past its version — the batch was applied before a
+        crash, so the caller publishes nothing."""
+        if txn is None:
+            return False
+        last = self._fold_txns(rv).get(txn[0])
+        return last is not None and last >= txn[1]
+
+    @staticmethod
+    def _txn_action(txn: tuple[str, int]) -> dict:
+        return {"txn": {"appId": txn[0], "version": int(txn[1])}}
+
+    def commit_txn(self, app_id: str, version: int) -> int:
+        """Record ``version`` as ``app_id``'s applied floor in a commit
+        that holds only the txn action: the maintenance floor of a fold
+        whose window changed no rows, so the next fold never re-reads
+        it."""
+        rv, _, _ = self._snapshot()
+        return self._commit([self._txn_action((app_id, version))], rv)
+
+    @staticmethod
+    def _key_probe(meta: dict, keys: Sequence[str],
+                   df: DataFrame) -> DataFrame:
+        """``df``'s key columns cast to the table's types, one row per
+        key tuple — the probe frame of a delete clause."""
+        schema = StructType.fromJson(meta["schema"])
+        return (df.select(*[F.col(f.name).cast(f.dataType)
+                            for f in schema.fields if f.name in keys])
+                .dropDuplicates(list(keys)))
+
+    def _keyed_rewrite(self, op: str, rv: int, meta: dict,
+                       live: dict[str, dict], clauses, inserts=None, *,
+                       upsert: bool = False, meta_changed: bool = False,
+                       validators: Sequence = (),
+                       txn: tuple[str, int] | None = None) -> int:
+        """The keyed copy-on-write path behind ``merge_upsert(update=
+        True)``, ``delete(mode="cow")``, :meth:`apply_changes` and
+        :meth:`apply_delta`: drop every live row whose key tuple one of
+        the ``(key_cols, probe)`` clauses holds, add ``inserts``, and
+        publish both in ONE commit planned on snapshot ``rv``.
+
+        1. Per clause: :meth:`_prune`, then the exact :meth:`_probe` of
+           the candidates — the files that really hold a probed key.
+        2. One :meth:`_key_range_validator` over every clause, then
+           ``validators``.
+        3. One scan of the affected files, anti-joined with each clause
+           and unioned with the inserts, staged; the identity high-water
+           mark, the meta action (``meta_changed``: a schema widening)
+           and the ``txn`` action ride the same commit.
+
+        Cost ∝ files holding matches + inserts, never table size. Each
+        probe is a distinct key frame typed like the table; an empty one
+        matches and conflicts with nothing. ``upsert=True``: every
+        insert's key lies in the probes, so when all probes are empty
+        the plan stops before any write. ``inserts`` may be a function
+        of the affected files (merge_upsert's identity carry-over). A
+        plan that touches nothing publishes no commit."""
+        ranges, plans, affected = [], [], set()
+        for keys, probe in clauses:
+            keys = list(keys)
+            rng, cand = self._prune(meta, live, keys, probe)
+            if not rng:
+                continue
+            ranges += rng
+            plans.append((keys, probe))
+            if cand:
+                matched, resolve = self._probe(meta, live, cand, keys, probe)
+                affected.update(resolve(r["_file"]) for r in
+                                matched.select("_file").distinct().collect())
+        if upsert and not plans:
+            return self.version
+        affected = sorted(affected)
+        if callable(inserts):
+            inserts = inserts(affected)
+        new_data = inserts
+        if affected:
+            keep = self._scan_files(meta, affected, dvs=self._live_dvs(live))
+            for keys, probe in plans:
+                keep = keep.join(probe, on=keys, how="left_anti")
+            new_data = keep if inserts is None else keep.unionByName(inserts)
+        actions, staged = self._stage_rows(new_data, meta, meta_changed)
+        actions += [{"remove": {"path": p}} for p in affected] + staged
+        if not actions:
+            return self.version
+        if txn is not None:
+            actions.append(self._txn_action(txn))
+        return self._commit(
+            actions, rv, info={"op": op},
+            validate=self._key_range_validator(op, meta, ranges, validators))
 
     def merge_upsert(self, batch: DataFrame, keys: Sequence[str],
                      update: bool = False,
@@ -2949,8 +3076,8 @@ class TxTable:
 
         ``update=True``: last-wins copy-on-write — existing rows with
         colliding keys are replaced by the batch row; only files that
-        actually contain a colliding key are rewritten (stat-range prune,
-        then an exact semi-join probe).
+        actually contain a colliding key are rewritten (the shared keyed
+        planner, :meth:`_keyed_rewrite`).
 
         ``merge_schema=True``: a batch with new columns widens the table
         schema in the same commit (old files — including the unrewritten
@@ -2989,10 +3116,9 @@ class TxTable:
                     f"append(merge_schema=True) with an empty batch to "
                     f"evolve first")
         batch = self._apply_generated(batch, meta)
-        extra_validators = []
+        validators = []
         if merge_schema:
-            batch, new_meta, extra_validators = self._evolve_schema(
-                batch, meta)
+            batch, new_meta, validators = self._evolve_schema(batch, meta)
             meta = new_meta or meta
         else:
             new_meta = None
@@ -3006,108 +3132,52 @@ class TxTable:
                       for f in sub.fields if f.name not in ident])
             else:
                 batch = self._check_schema(batch)
-        schema = StructType.fromJson(meta["schema"])
         batch = batch.dropDuplicates(keys)
-        _n, bounds = self._batch_bounds(batch, keys)
-        pkeys, pbounds = self._extend_generated_bounds(meta, keys, bounds)
-        cand = self._candidate_files(live, pkeys, pbounds)
-        cand = self._bloom_candidates(cand, live, keys, batch, meta)
-        stat_cols = meta.get("stat_cols", [])
-
-        def no_key_overlap(intervening):
-            # A concurrent commit that ADDED a file whose key-stat range
-            # overlaps this batch may have inserted/updated one of our
-            # keys — the merge's anti-join/replace decisions are stale.
-            # Conservative (stat-grain) but never silent: caller re-runs.
-            for a in intervening:
-                if "add" in a and self._overlaps(
-                        self._add_logical(meta, a["add"]), pkeys, pbounds):
-                    raise TxConflict(
-                        f"concurrent commit added keys overlapping this "
-                        f"merge's key range on {self.path}; re-run the "
-                        f"merge on the new snapshot")
-
-        def validate(intervening):
-            no_key_overlap(intervening)
-            for v in extra_validators:
-                v(intervening)
-
-        meta_actions = [{"meta": meta}] if new_meta else []
-        dvs = self._live_dvs(live)
-        if not update:
-            if cand:
-                existing = self._scan_files(meta, cand,
-                                            dvs=dvs).select(*keys)
-                batch = batch.join(existing.distinct(), on=keys,
-                                   how="left_anti")
+        probe = batch.select(*keys).distinct()
+        if update:
+            inserts = batch
             if ident:
-                # first-wins: every surviving batch row is an INSERT —
-                # allocate its identity values now
-                batch = self._check_schema(
-                    self._assign_identity(batch, meta))
-            staged = self._stage(
-                batch, stat_cols, bloom=meta.get("bloom"),
-                constraints=self._write_constraints(meta),
-                partition_cols=meta.get("partition_cols"),
-                colmap=meta.get("column_mapping"))
-            id_meta = self._identity_meta(meta, staged)
-            if id_meta:
-                meta_actions = [{"meta": id_meta}]
-            adds = meta_actions + staged
-            # a pure schema widening (every row was a duplicate) still
-            # commits: the caller asked for the evolved schema
-            return (self._commit(adds, rv, validate=validate,
-                                 info={"op": "merge_upsert"})
-                    if adds else self.version)
-        # update=True: find files that REALLY hold colliding keys
-        affected: list[str] = []
+                def inserts(affected):
+                    # matched rows KEEP their existing identity values
+                    # (taken from the rows being replaced — min per key
+                    # for the degenerate multi-match case), inserts
+                    # allocate fresh ones
+                    if not affected:
+                        return self._check_schema(
+                            self._assign_identity(batch, meta))
+                    id_map = (self._scan_files(meta, affected,
+                                               dvs=self._live_dvs(live))
+                              .groupBy(*keys)
+                              .agg(*[F.min(c).alias(c) for c in id_cols]))
+                    matched = batch.join(id_map, on=keys, how="inner")
+                    fresh = self._assign_identity(
+                        batch.join(id_map.select(*keys), on=keys,
+                                   how="left_anti"), meta)
+                    return self._check_schema(matched.unionByName(fresh))
+            return self._keyed_rewrite(
+                "merge_upsert", rv, meta, live, [(keys, probe)], inserts,
+                upsert=True, meta_changed=new_meta is not None,
+                validators=validators)
+        ranges, cand = self._prune(meta, live, keys, probe)
         if cand:
-            resolve = self._path_resolver(cand, len(meta.get("partition_cols") or ()))
-            cdf = self._scan_files(meta, cand, with_file=True, dvs=dvs)
-            # AQE picks broadcast-semi when the batch key set is small
-            # (the common MERGE shape); no forced hint — a bulk backfill
-            # batch can exceed the broadcast limit.
-            affected = [resolve(r["_file"]) for r in
-                        cdf.select("_file", *keys)
-                        .join(batch.select(*keys).distinct(),
-                              on=keys, how="left_semi")
-                        .select("_file").distinct().collect()]
+            existing = self._scan_files(meta, cand, dvs=self._live_dvs(live))
+            batch = batch.join(existing.select(*keys).distinct(), on=keys,
+                               how="left_anti")
         if ident:
-            # matched rows KEEP their existing identity values (taken
-            # from the rows being replaced — min per key for the
-            # degenerate multi-match case), inserts allocate fresh ones
-            if affected:
-                id_map = (self._scan_files(meta, affected, dvs=dvs)
-                          .groupBy(*keys)
-                          .agg(*[F.min(c).alias(c) for c in id_cols]))
-                matched = batch.join(id_map, on=keys, how="inner")
-                fresh = batch.join(id_map.select(*keys), on=keys,
-                                   how="left_anti")
-            else:
-                matched, fresh = None, batch
-            fresh = self._assign_identity(fresh, meta)
-            batch = (fresh if matched is None
-                     else matched.unionByName(fresh))
-            batch = self._check_schema(batch)
-        actions = [{"remove": {"path": p}} for p in sorted(affected)]
-        if affected:
-            keep = (self._scan_files(meta, affected, dvs=dvs)
-                    .join(batch.select(*keys).distinct(), on=keys,
-                          how="left_anti"))
-            new_data = keep.unionByName(batch)
-        else:
-            new_data = batch
-        staged = self._stage(new_data, stat_cols,
-                             bloom=meta.get("bloom"),
-                             constraints=self._write_constraints(meta),
-                             partition_cols=meta.get("partition_cols"),
-                             colmap=meta.get("column_mapping"))
-        id_meta = self._identity_meta(meta, staged)
-        if id_meta:
-            meta_actions = [{"meta": id_meta}]
-        actions = meta_actions + actions + staged
-        return self._commit(actions, rv, validate=validate,
-                            info={"op": "merge_upsert"})
+            # first-wins: every surviving batch row is an INSERT —
+            # allocate its identity values now
+            batch = self._check_schema(self._assign_identity(batch, meta))
+        # a pure schema widening (every row was a duplicate) still
+        # commits: the caller asked for the evolved schema
+        meta_actions, staged = self._stage_rows(batch, meta,
+                                                new_meta is not None)
+        actions = meta_actions + staged
+        if not actions:
+            return self.version
+        return self._commit(
+            actions, rv, info={"op": "merge_upsert"},
+            validate=self._key_range_validator("merge_upsert", meta, ranges,
+                                               validators))
 
     #: dv mode holds (file, key) tombstones in the driver + the JSON log;
     #: past this many matched pairs the log line stops being "driver-
@@ -3121,10 +3191,10 @@ class TxTable:
 
         ``mode="cow"`` (default — the public Delta DELETE shape): every
         file holding a matching key is rewritten without the matching
-        rows (stat-range prune, then an exact semi-join probe — the
-        same planner as :meth:`merge_upsert`). The CDC feed surfaces
-        the rewrite as removed-file rows (deletes) plus survivors
-        (inserts), netting to exactly the deleted rows.
+        rows (the shared keyed planner, :meth:`_keyed_rewrite`, with no
+        inserts). The CDC feed surfaces the rewrite as removed-file rows
+        (deletes) plus survivors (inserts), netting to exactly the
+        deleted rows.
 
         ``mode="dv"`` (merge-on-read, the Iceberg equality-delete /
         Delta deletion-vector idea): ZERO data files are rewritten —
@@ -3140,7 +3210,8 @@ class TxTable:
         reads deletion vectors; older clients refuse loudly). Key
         columns must be integral/string/boolean (tombstones live in
         the JSON log and must compare portably); matched pairs are
-        capped at ``_DV_MAX_PAIRS`` — bulk deletes belong to cow.
+        capped at ``_DV_MAX_PAIRS`` — bulk deletes belong to cow. The
+        planner's prune and probe steps find the matched pairs.
 
         Conflicts like a merge: a concurrent commit adding keys inside
         this delete's key range invalidates the probe (a just-inserted
@@ -3152,64 +3223,29 @@ class TxTable:
         keys = list(keys)
         rv, meta, live = self._snapshot()
         self._require_mutable(meta, "delete")
-        if mode == "dv":
-            schema_types = {f["name"]: f["type"]
-                            for f in meta["schema"]["fields"]
-                            if isinstance(f.get("type"), str)}
-            ok = {"byte", "short", "integer", "long", "string", "boolean"}
-            bad = sorted(k for k in keys
-                         if schema_types.get(k, "?") not in ok)
-            if bad:
-                raise ValueError(
-                    f"dv delete keys {bad} have non-portable types; "
-                    f"deletion-vector tombstones live in the JSON log "
-                    f"and support integral/string/boolean keys only "
-                    f"(use mode='cow')")
-        schema = StructType.fromJson(meta["schema"])
-        key_schema = StructType([f for f in schema.fields
-                                 if f.name in keys])
-        batch = (batch.select(*[F.col(f.name).cast(f.dataType)
-                                for f in key_schema.fields])
-                 .dropDuplicates(keys))
-        _n, bounds = self._batch_bounds(batch, keys)
-        pkeys, pbounds = self._extend_generated_bounds(meta, keys, bounds)
-        cand = self._candidate_files(live, pkeys, pbounds)
-        cand = self._bloom_candidates(cand, live, keys, batch, meta)
-        stat_cols = meta.get("stat_cols", [])
-
-        def no_key_overlap(intervening):
-            for a in intervening:
-                if "add" in a and self._overlaps(
-                        self._add_logical(meta, a["add"]), pkeys, pbounds):
-                    raise TxConflict(
-                        f"concurrent commit added keys overlapping this "
-                        f"delete's key range on {self.path}; re-run the "
-                        f"delete on the new snapshot")
-
+        probe = self._key_probe(meta, keys, batch)
+        if mode == "cow":
+            return self._keyed_rewrite("delete", rv, meta, live,
+                                       [(keys, probe)])
+        schema_types = {f["name"]: f["type"]
+                        for f in meta["schema"]["fields"]
+                        if isinstance(f.get("type"), str)}
+        ok = {"byte", "short", "integer", "long", "string", "boolean"}
+        bad = sorted(k for k in keys if schema_types.get(k, "?") not in ok)
+        if bad:
+            raise ValueError(
+                f"dv delete keys {bad} have non-portable types; "
+                f"deletion-vector tombstones live in the JSON log "
+                f"and support integral/string/boolean keys only "
+                f"(use mode='cow')")
+        ranges, cand = self._prune(meta, live, keys, probe)
         if not cand:
             return self.version  # nothing can match: no-op, no commit
-        dvs = self._live_dvs(live)
-        resolve = self._path_resolver(cand, len(meta.get("partition_cols") or ()))
-        cdf = self._scan_files(meta, cand, with_file=True, dvs=dvs)
-        matched = (cdf.select("_file", *keys)
-                   .join(batch, on=keys, how="left_semi"))
-        if mode == "dv":
-            return self._delete_dv(meta, rv, keys, matched,
-                                   no_key_overlap, resolve, dvs)
-        affected = [resolve(r["_file"]) for r in
-                    matched.select("_file").distinct().collect()]
-        if not affected:
-            return self.version  # stat ranges overlapped, no real match
-        keep = (self._scan_files(meta, affected, dvs=dvs)
-                .join(batch, on=keys, how="left_anti"))
-        actions = [{"remove": {"path": p}} for p in sorted(affected)]
-        actions += self._stage(keep, stat_cols,
-                               bloom=meta.get("bloom"),
-                               constraints=self._write_constraints(meta),
-                               partition_cols=meta.get("partition_cols"),
-                               colmap=meta.get("column_mapping"))
-        return self._commit(actions, rv, validate=no_key_overlap,
-                            info={"op": "delete"})
+        matched, resolve = self._probe(meta, live, cand, keys, probe)
+        return self._delete_dv(
+            meta, rv, keys, matched,
+            self._key_range_validator("delete", meta, ranges), resolve,
+            self._live_dvs(live))
 
     def _delete_dv(self, meta: dict, rv: int, keys: list[str],
                    matched: DataFrame, validate, resolve,
@@ -3221,13 +3257,12 @@ class TxTable:
         CDC never double-emits a delete.
 
         A file's tombstones must all share ONE key-column set (they are
-        folded as a single keyed set — :func:`_merge_dv`), so a delete
+        folded as a single keyed set — ``txproto.merge_dv``), so a delete
         whose ``keys`` differ from a target file's existing DV keyCols
         is refused at plan time (and a concurrent such delete is a
         :class:`TxConflict` — see ``dv_keycols`` in :meth:`_commit`)
         rather than publishing a commit every later fold would choke
         on."""
-        from .txproto import DV_PROTOCOL, merged_protocol, needs_upgrade
         pairs = (matched.select("_file", *keys).distinct()
                  .limit(self._DV_MAX_PAIRS + 1).collect())
         if len(pairs) > self._DV_MAX_PAIRS:
@@ -3299,10 +3334,10 @@ class TxTable:
         The window is netted first (``exceptAll`` both ways), so rows
         carried unchanged through the source's copy-on-write rewrites
         cancel and cost nothing — the same discipline as
-        :func:`~..operators.neardup.fold_cdc_near_dup`. Then ONE
-        stat-pruned probe finds the files holding any touched key, and
-        one rewrite drops/replaces them: cost ∝ files containing
-        touched keys, never table size. A window that nets to nothing
+        :func:`~..operators.neardup.fold_cdc_near_dup`. Then the shared
+        keyed planner (:meth:`_keyed_rewrite`) drops the touched keys
+        and adds the netted inserts: cost ∝ files containing touched
+        keys, never table size. A window that nets to nothing
         publishes NO commit (a replay of it is identically nothing).
         Conflicts: a concurrent commit adding keys in the touched range
         raises :class:`TxConflict` (the merge rule).
@@ -3310,15 +3345,10 @@ class TxTable:
         keys = list(keys)
         rv, meta, live = self._snapshot()
         self._require_mutable(meta, "apply_changes")
-        if txn is not None:
-            app, ver = txn
-            last = self._fold_txns(rv).get(app)
-            if last is not None and last >= ver:
-                return self.version  # replayed batch: already applied
-        schema = StructType.fromJson(meta["schema"])
-        stored = {f.name for f in schema.fields}
+        if self._replayed(rv, txn):
+            return self.version  # replayed batch: already applied
+        stored = {f["name"] for f in meta["schema"]["fields"]}
         feed_cols = [c for c in changes.columns if c != "_change_type"]
-        extra = [c for c in feed_cols if c not in stored]
         # Net on the FEED's schema (both tags share it), so a widened
         # source column participates in the cancel before conforming.
         ins = changes.filter(F.col("_change_type") == "insert") \
@@ -3327,17 +3357,16 @@ class TxTable:
             .select(*feed_cols)
         net_ins = ins.exceptAll(dels)
         net_del = dels.exceptAll(ins)
-        evolve_validators: list = []
+        validators: list = []
         new_meta = None
-        if extra:
+        if any(c not in stored for c in feed_cols):
             # Follow the source's widening: evolve the replica schema in
             # the same commit (nullable, feed types — the merge_schema
             # contract), instead of silently projecting the column away.
-            net_ins, new_meta, evolve_validators = self._evolve_schema(
-                net_ins, meta)
-            if new_meta is not None:
-                meta = new_meta
-                schema = StructType.fromJson(meta["schema"])
+            # Pre-widening survivor files read the new column as null.
+            net_ins, new_meta, validators = self._evolve_schema(net_ins,
+                                                                meta)
+            meta = new_meta or meta
         else:
             net_ins = self._check_schema(net_ins)
         # Keyed replication needs key-unique sources: >1 netted insert
@@ -3356,66 +3385,13 @@ class TxTable:
         touched = (net_ins.select(*keys)
                    .unionByName(net_del.select(*keys)).distinct()
                    .localCheckpoint(eager=True))
-        n_touched, bounds = self._batch_bounds(touched, keys)
-        if n_touched == 0:
-            return self.version  # window netted to nothing: no commit
-        pkeys, pbounds = self._extend_generated_bounds(meta, keys, bounds)
-        cand = self._candidate_files(live, pkeys, pbounds)
-        cand = self._bloom_candidates(cand, live, keys, touched, meta)
-        stat_cols = meta.get("stat_cols", [])
-
-        def no_key_overlap(intervening):
-            for a in intervening:
-                if "add" in a and self._overlaps(
-                        self._add_logical(meta, a["add"]), pkeys, pbounds):
-                    raise TxConflict(
-                        f"concurrent commit added keys overlapping this "
-                        f"change window on {self.path}; re-run against "
-                        f"the new snapshot")
-
-        affected: list[str] = []
-        dvs = self._live_dvs(live)
-        if cand:
-            resolve = self._path_resolver(cand, len(meta.get("partition_cols") or ()))
-            cdf = self._scan_files(meta, cand, with_file=True, dvs=dvs)
-            affected = [resolve(r["_file"]) for r in
-                        cdf.select("_file", *keys)
-                        .join(touched, on=keys, how="left_semi")
-                        .select("_file").distinct().collect()]
-        removes = [{"remove": {"path": p}} for p in sorted(affected)]
-        if affected:
-            # Evolved schema null-fills pre-widening survivor files,
-            # same as the source's own post-merge_schema reads.
-            keep = (self._scan_files(meta, affected, dvs=dvs)
-                    .join(touched, on=keys, how="left_anti"))
-            new_data = keep.unionByName(net_ins)
-        else:
-            new_data = net_ins
-        staged = self._stage(new_data, stat_cols,
-                             bloom=meta.get("bloom"),
-                             constraints=self._write_constraints(meta),
-                             partition_cols=meta.get("partition_cols"),
-                             colmap=meta.get("column_mapping"))
-        # identity REPLICAS carry the source's engine-assigned ids in
-        # the feed; the replica's own hwm must still track them so a
+        # identity REPLICAS carry the source's engine-assigned ids in the
+        # feed; the planner still advances the replica's own hwm so a
         # later direct append cannot re-allocate an id already present
-        id_meta = self._identity_meta(meta, staged)
-        meta = id_meta or meta
-        actions = ([{"meta": meta}]
-                   if (new_meta is not None or id_meta) else [])
-        actions += removes + staged
-        if txn is not None:
-            actions.append({"txn": {"appId": txn[0],
-                                    "version": int(txn[1])}})
-        if not actions:
-            return self.version
-
-        def validate(intervening):
-            no_key_overlap(intervening)
-            for v in evolve_validators:
-                v(intervening)
-        return self._commit(actions, rv, validate=validate,
-                            info={"op": "apply_changes"})
+        return self._keyed_rewrite(
+            "apply_changes", rv, meta, live, [(keys, touched)], net_ins,
+            upsert=True, meta_changed=new_meta is not None,
+            validators=validators, txn=txn)
 
     def apply_delta(self, deletes: Sequence[tuple[Sequence[str], DataFrame]],
                     inserts: DataFrame | None = None,
@@ -3433,95 +3409,29 @@ class TxTable:
         rows per key (a document's shingle set). No netting, no
         key-uniqueness: the caller supplies exact deltas.
 
-        Planner: each clause stat-prunes the live set on ITS key bounds
-        and probes only the candidate files for true matches; the union
-        of affected files is rewritten ONCE with all clauses' rows
-        dropped. Cost ∝ files holding matches + inserts, never table
-        size. ``txn`` gives streaming folds the standard idempotent-
-        replay guard. A delta that matches nothing and inserts nothing
-        publishes no commit. Conflicts: a concurrent commit adding keys
-        inside any clause's range raises :class:`TxConflict`.
+        Planner (:meth:`_keyed_rewrite`): each clause stat-prunes the
+        live set on ITS key bounds and probes only the candidate files
+        for true matches; the union of affected files is rewritten ONCE
+        with all clauses' rows dropped. Cost ∝ files holding matches +
+        inserts, never table size. ``txn`` gives streaming folds the
+        standard idempotent-replay guard. A delta that matches nothing
+        and inserts nothing publishes no commit. Conflicts: a concurrent
+        commit adding keys inside any clause's range raises
+        :class:`TxConflict`.
         """
         rv, meta, live = self._snapshot()
         self._require_mutable(meta, "apply_delta")
-        if txn is not None:
-            app, ver = txn
-            last = self._fold_txns(rv).get(app)
-            if last is not None and last >= ver:
-                return self.version  # replayed batch: already applied
-        schema = StructType.fromJson(meta["schema"])
-        stat_cols = meta.get("stat_cols", [])
-        dvs = self._live_dvs(live)
-        probes: list[tuple[list[str], DataFrame, dict]] = []
-        affected: set[str] = set()
-        for key_cols, kdf in deletes:
-            key_cols = list(key_cols)
-            key_schema = StructType([f for f in schema.fields
-                                     if f.name in key_cols])
-            probe = (kdf.select(*[F.col(f.name).cast(f.dataType)
-                                  for f in key_schema.fields])
-                     .dropDuplicates(key_cols)
-                     .localCheckpoint(eager=True))
-            n_probe, bounds = self._batch_bounds(probe, key_cols)
-            if n_probe == 0:
-                continue
-            pkeys, pbounds = self._extend_generated_bounds(
-                meta, key_cols, bounds)
-            cand = self._candidate_files(live, pkeys, pbounds)
-            probes.append((pkeys, probe, pbounds, key_cols))
-            if not cand:
-                continue
-            resolve = self._path_resolver(cand, len(meta.get("partition_cols") or ()))
-            cdf = self._scan_files(meta, cand, with_file=True,
-                                   dvs=dvs)
-            affected.update(
-                resolve(r["_file"]) for r in
-                cdf.select("_file", *key_cols)
-                .join(probe, on=key_cols, how="left_semi")
-                .select("_file").distinct().collect())
-
-        def no_key_overlap(intervening):
-            for a in intervening:
-                if "add" not in a:
-                    continue
-                for pkeys, _probe, pbounds, _kc in probes:
-                    if self._overlaps(self._add_logical(meta, a["add"]),
-                                      pkeys, pbounds):
-                        raise TxConflict(
-                            f"concurrent commit added keys overlapping "
-                            f"this delta's range on {self.path}; re-run "
-                            f"against the new snapshot")
-
-        actions = [{"remove": {"path": p}} for p in sorted(affected)]
-        new_data = None
-        if affected:
-            keep = self._scan_files(meta, sorted(affected), dvs=dvs)
-            for _pkeys, probe, _pbounds, key_cols in probes:
-                keep = keep.join(probe, on=key_cols, how="left_anti")
-            new_data = keep
+        if self._replayed(rv, txn):
+            return self.version  # replayed batch: already applied
+        # a generator: each clause's probe materializes right before
+        # the planner prunes and probes with it
+        clauses = ((list(kc), self._key_probe(meta, kc, kdf)
+                    .localCheckpoint(eager=True)) for kc, kdf in deletes)
         if inserts is not None:
-            ins = self._check_schema(self._apply_generated(inserts, meta))
-            new_data = (ins if new_data is None
-                        else new_data.unionByName(ins))
-        if new_data is not None:
-            staged = self._stage(new_data, stat_cols,
-                                 bloom=meta.get("bloom"),
-                                 constraints=self._write_constraints(meta),
-                                 partition_cols=meta.get(
-                                     "partition_cols"),
-                                 colmap=meta.get("column_mapping"))
-            # identity replicas: track the feed's ids (see apply_changes)
-            id_meta = self._identity_meta(meta, staged)
-            if id_meta:
-                actions.insert(0, {"meta": id_meta})
-            actions += staged
-        if not actions:
-            return self.version  # empty delta: no commit, replay-safe
-        if txn is not None:
-            actions.append({"txn": {"appId": txn[0],
-                                    "version": int(txn[1])}})
-        return self._commit(actions, rv, validate=no_key_overlap,
-                            info={"op": "apply_delta"})
+            inserts = self._check_schema(self._apply_generated(inserts,
+                                                               meta))
+        return self._keyed_rewrite("apply_delta", rv, meta, live, clauses,
+                                   inserts, txn=txn)
 
     def update(self, condition: str, assignments: dict[str, str]) -> int:
         """Atomic UPDATE (copy-on-write, the public Delta UPDATE shape):
@@ -3571,17 +3481,16 @@ class TxTable:
         # column fed by an assignment means rows change partitions —
         # refused like any partition-column assignment
         touched_gen: dict[str, str] = {}
-        pcols_set = set(meta.get("partition_cols") or ())
+        pcols = set(meta.get("partition_cols") or ())
         for a in list(assignments):
             for g in self._generated_refs(meta, a):
-                if g in pcols_set:
+                if g in pcols:
                     raise ValueError(
                         f"UPDATE assigns {a!r}, which feeds generated "
                         f"partition column {g!r} of {self.path}: a row "
                         f"changing partitions is a delete + insert "
                         f"(run delete() then append())")
                 touched_gen[g] = gen[g]
-        stat_cols = meta.get("stat_cols", [])
         cond = F.expr(condition)
 
         def no_data_change(intervening):
@@ -3594,7 +3503,6 @@ class TxTable:
 
         if not live:
             return self.version
-        pcols = set(meta.get("partition_cols") or ())
         moved = sorted(pcols & set(assignments))
         if moved:
             raise ValueError(
@@ -3602,7 +3510,7 @@ class TxTable:
                 f"{self.path}: a row changing partitions is a delete + "
                 f"insert (run delete() then append(), or merge_upsert)")
         dvs = self._live_dvs(live)
-        resolve = self._path_resolver(sorted(live), len(meta.get("partition_cols") or ()))
+        resolve = self._path_resolver(sorted(live), len(pcols))
         cdf = self._scan_files(meta, sorted(live), with_file=True,
                                dvs=dvs)
         affected = [resolve(r["_file"]) for r in
@@ -3630,11 +3538,7 @@ class TxTable:
                  if f.name in touched_gen else F.col(f.name))
                 for f in schema.fields])
         actions = [{"remove": {"path": p}} for p in sorted(affected)]
-        actions += self._stage(rewritten, stat_cols,
-                               bloom=meta.get("bloom"),
-                               constraints=self._write_constraints(meta),
-                               partition_cols=meta.get("partition_cols"),
-                               colmap=meta.get("column_mapping"))
+        actions += self._stage(rewritten, meta)
         return self._commit(actions, rv, validate=no_data_change,
                             info={"op": "update"})
 
@@ -3813,12 +3717,7 @@ class TxTable:
             packed = packed.repartition(n_out)
         actions = [{"remove": {"path": p, "dataChange": False}}
                    for p in small]
-        actions += self._stage(packed, meta.get("stat_cols", []),
-                               data_change=False,
-                               bloom=meta.get("bloom"),
-                               constraints=self._write_constraints(meta),
-                               partition_cols=pcols,
-                               colmap=meta.get("column_mapping"))
+        actions += self._stage(packed, meta, data_change=False)
         return self._commit(actions, rv, info={"op": "optimize"})
 
     def repartition_table(self, partition_cols: Sequence[str] = (),
@@ -3889,12 +3788,7 @@ class TxTable:
                     else data.repartition(n_out))
             actions += [{"remove": {"path": p, "dataChange": False}}
                         for p in sorted(live)]
-            actions += self._stage(
-                data, meta.get("stat_cols", []), data_change=False,
-                bloom=meta.get("bloom"),
-                constraints=self._write_constraints(new_meta),
-                partition_cols=new_p,
-                colmap=meta.get("column_mapping"))
+            actions += self._stage(data, new_meta, data_change=False)
 
         def no_data_change(intervening):
             for a in intervening:
@@ -3975,7 +3869,7 @@ class TxTable:
                     cur = live.get(a["dv"]["path"])
                     if cur is not None:
                         live[a["dv"]["path"]] = {
-                            **cur, "dv": _merge_dv(cur.get("dv"),
+                            **cur, "dv": merge_dv(cur.get("dv"),
                                                    a["dv"])}
                 elif "protocol" in a:
                     proto = a["protocol"]

@@ -220,6 +220,25 @@ def parse_partition_values(relpath: str, pcols, types: dict) -> dict:
     return out
 
 
+def merge_dv(cur: dict | None, new: dict) -> dict:
+    """Union two deletion-vector key sets for one file — the fold step
+    both tiers (``TxTable`` and the plain-IO DataSources) share. The
+    key columns must match (enforced at commit); a second delete of an
+    already-tombstoned key is deduplicated so CDC never double-emits
+    it."""
+    if cur is None:
+        return {"keyCols": list(new["keyCols"]),
+                "keys": [list(k) for k in new["keys"]]}
+    if list(cur["keyCols"]) != list(new["keyCols"]):
+        raise ValueError(
+            f"deletion vectors on one file must share key columns "
+            f"({cur['keyCols']} vs {new['keyCols']})")
+    seen = {tuple(k) for k in cur["keys"]}
+    merged = [list(k) for k in cur["keys"]]
+    merged += [list(k) for k in new["keys"] if tuple(k) not in seen]
+    return {"keyCols": list(cur["keyCols"]), "keys": merged}
+
+
 _TRAILER_KEY = "commit"
 
 

@@ -254,9 +254,7 @@ def _fold(spark: SparkSession, star: WeatherStar, from_v: int, to_v: int,
         # Advance the maintenance floor even for a no-data window
         # (layout-only commits, out-of-window readings) so the next
         # fold never re-reads it. A bare txn action is that floor.
-        rv, _, _ = star.winners._snapshot()
-        star.winners._commit(
-            [{"txn": {"appId": _APP, "version": int(to_v)}}], rv)
+        star.winners.commit_txn(_APP, to_v)
         return
 
     cur = (star.winners.read_keys(touched, STG_KEYS)
@@ -305,9 +303,7 @@ def _fold(spark: SparkSession, star: WeatherStar, from_v: int, to_v: int,
         # nothing and publishes no commit, so record the floor with a
         # bare txn action — otherwise every later maintain() would
         # re-fold this window (idempotently, but forever).
-        rv, _, _ = star.winners._snapshot()
-        star.winners._commit(
-            [{"txn": {"appId": _APP, "version": int(to_v)}}], rv)
+        star.winners.commit_txn(_APP, to_v)
 
 
 def _rollup_state(fact_rows: DataFrame) -> DataFrame:
@@ -349,9 +345,7 @@ def maintain_city_daily_rollup(spark: SparkSession,
     touched = (changes.select(*ROLLUP_KEYS).distinct()
                .localCheckpoint(eager=True))
     if touched.isEmpty():
-        rv, _, _ = roll._snapshot()
-        roll._commit([{"txn": {"appId": _ROLLUP_APP,
-                               "version": int(to_v)}}], rv)
+        roll.commit_txn(_ROLLUP_APP, to_v)
         return to_v
     group_rows = fact.read_keys(touched, ROLLUP_KEYS, version=to_v)
     new_state = _rollup_state(group_rows)
@@ -362,9 +356,7 @@ def maintain_city_daily_rollup(spark: SparkSession,
         # every touched group recomputed to its existing state (e.g. a
         # carried-through rewrite): record the floor so later calls
         # never re-fold this window
-        rv, _, _ = roll._snapshot()
-        roll._commit([{"txn": {"appId": _ROLLUP_APP,
-                               "version": int(to_v)}}], rv)
+        roll.commit_txn(_ROLLUP_APP, to_v)
     return to_v
 
 

@@ -42,8 +42,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ..operators.txproto import (check_protocol, parse_commit_lines,
-                                 parse_partition_values)
+from ..operators.txproto import (check_protocol, merge_dv,
+                                 parse_commit_lines, parse_partition_values)
 
 _LOG_DIR = "_txlog"
 
@@ -81,23 +81,6 @@ def _read_commit(table: str, version: int) -> list[dict]:
                                   f"{table}@v{version}")
 
 
-def _merge_dv_plain(cur: dict | None, new: dict) -> dict:
-    """Plain-IO twin of ``txlog._merge_dv`` (tombstone-set union) —
-    raising identically on a keyCols mismatch so the two fold tiers
-    never diverge on a malformed log."""
-    if cur is None:
-        return {"keyCols": list(new["keyCols"]),
-                "keys": [list(k) for k in new["keys"]]}
-    if list(cur["keyCols"]) != list(new["keyCols"]):
-        raise ValueError(
-            f"deletion vectors on one file must share key columns "
-            f"({cur['keyCols']} vs {new['keyCols']})")
-    seen = {tuple(k) for k in cur["keys"]}
-    merged = [list(k) for k in cur["keys"]]
-    merged += [list(k) for k in new["keys"] if tuple(k) not in seen]
-    return {"keyCols": list(cur["keyCols"]), "keys": merged}
-
-
 def fold_snapshot(table: str, version: int | None = None,
                   reader_cap: int = _READER_CAP):
     """Plain-IO twin of ``TxTable._snapshot``: (version, meta, live,
@@ -132,8 +115,7 @@ def fold_snapshot(table: str, version: int | None = None,
             cur = live.get(action["dv"]["path"])
             if cur is not None:
                 live[action["dv"]["path"]] = {
-                    **cur, "dv": _merge_dv_plain(cur.get("dv"),
-                                                 action["dv"])}
+                    **cur, "dv": merge_dv(cur.get("dv"), action["dv"])}
         elif "txn" in action:
             a, ver = action["txn"]["appId"], action["txn"]["version"]
             txns[a] = max(ver, txns.get(a, ver))
@@ -393,7 +375,7 @@ class TxLogCdcStreamReader(DataSourceStreamReader):
                         dv_dels.append((d["path"],
                                         {"keyCols": list(d["keyCols"]),
                                          "keys": fresh}))
-                    dv_state[d["path"]] = _merge_dv_plain(cur, d)
+                    dv_state[d["path"]] = merge_dv(cur, d)
         # Multiset netting (same fix as TxTable.read_changes): RESTORE
         # re-adds a removed path, so add/remove counts inside one window
         # can be unbalanced — net by Counter difference, never by set

@@ -2907,3 +2907,24 @@ def test_mmr_rerank_enforces_candidate_cap(spark):
         [], "id_a bigint, id_b bigint, sim double")
     with pytest.raises(ValueError, match="MMR_MAX_CANDS"):
         mmr_rerank(cands, psim, k=3)
+
+
+def test_mmr_rerank_enforces_pair_cap(spark, monkeypatch):
+    """The pair side of the contract: more than MMR_MAX_CANDS**2
+    similarity rows raises instead of being silently truncated (a
+    dropped pair changes which candidate wins). The cap is shrunk so
+    the over-wide frame stays tiny."""
+    import pytest
+
+    from meteomatics_e2e_data_pipeline_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "MMR_MAX_CANDS", 3)
+    cands = spark.range(3).select(
+        F.col("id").alias("doc_id"), F.lit(0.5).alias("rel"))
+    pairs = spark.range(3).crossJoin(
+        spark.range(3).withColumnRenamed("id", "id_b")).select(
+        F.col("id").alias("id_a"), "id_b", F.lit(0.1).alias("sim"))
+    assert similarity.mmr_rerank(cands, pairs, k=2).count() == 2
+    wide = pairs.unionByName(pairs.limit(1))
+    with pytest.raises(ValueError, match="MMR_MAX_CANDS"):
+        similarity.mmr_rerank(cands, wide, k=2)

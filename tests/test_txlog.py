@@ -179,17 +179,14 @@ def _heavy_test_concurrent_overlapping_merge_conflicts(spark, tmp_path):
     # writer B lands a merge inserting keys 60..70 first
     TxTable(spark, p).merge_upsert(_kv(spark, 60, 70, parts=1), ["k"])
     # writer A planned an overlapping merge against the old snapshot;
-    # replay its commit with A's staged adds and old read version
+    # replay its commit with A's staged adds, old read version and the
+    # keyed planners' conflict validator
     batch = _kv(spark, 60, 70, mul=9, parts=1)
     _n, bounds = t._batch_bounds(batch, ["k"])
-    adds = t._stage(batch, ["k"])
-
-    def no_key_overlap(intervening):
-        for a in intervening:
-            if "add" in a and t._overlaps(a["add"], ["k"], bounds):
-                raise TxConflict("overlap")
-    with pytest.raises(TxConflict):
-        t._commit(adds, rv, validate=no_key_overlap)
+    adds = t._stage(batch, meta)
+    validate = t._key_range_validator("merge_upsert", meta, [(["k"], bounds)])
+    with pytest.raises(TxConflict, match="overlapping this merge_upsert's"):
+        t._commit(adds, rv, validate=validate)
     # a DISJOINT merge against the same old snapshot commits fine
     t.merge_upsert(_kv(spark, 200, 205, parts=1), ["k"])
     assert t.read().filter("k >= 200").count() == 5
@@ -303,9 +300,8 @@ def test_keyed_dml_spark_job_counts(spark, tmp_path):
     one shows up here before it shows up in pipeline latency. Batches
     have a fixed partition count, so ``limit`` collects scan the same
     partitions at any session parallelism (counts are identical at any
-    local[N]); the
-    table is 4 contiguous-key files, so every planner stat-prunes to
-    one candidate. Job groups are thread-local, so concurrently pooled
+    local[N]); the table is 4 contiguous-key files, so every planner
+    stat-prunes to one candidate. Job groups are thread-local, so concurrently pooled
     test bodies never leak into a group."""
     sc = spark.sparkContext
 

@@ -179,7 +179,7 @@ def test_optimize_commutes_with_concurrent_appends(spark, tmp_path):
     packed = (t.spark.read.schema(t.schema())
               .parquet(*[f"{p}/{f}" for f in small]).repartition(1))
     actions = [{"remove": {"path": f, "dataChange": False}} for f in small]
-    actions += t._stage(packed, meta["stat_cols"], data_change=False)
+    actions += t._stage(packed, meta, data_change=False)
     TxTable(spark, p).append(_kv(spark, 100, 110))   # concurrent writer
     v = t._commit(actions, rv)                       # retries, no conflict
     assert v == 2
@@ -291,7 +291,7 @@ def test_merge_schema_concurrent_widenings_conflict(spark, tmp_path):
     def validate(intervening):
         for v in vals_a:
             v(intervening)
-    actions = [{"meta": meta_a}] + t._stage(out_a, ["k"])
+    actions = [{"meta": meta_a}] + t._stage(out_a, meta_a)
     with pytest.raises(TxConflict, match="schema change"):
         t._commit(actions, rv, validate=validate)
     # the re-run (fresh snapshot) folds BOTH columns

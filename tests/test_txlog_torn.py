@@ -250,10 +250,11 @@ def _heavy_test_concurrent_commit_surfaces_torn_intervening_version(spark, tmp_p
     """A writer validating intervening commits must also refuse to build
     on a torn one — optimistic concurrency reads the same wire format."""
     t = _make_table(spark, tmp_path, "conc")
-    stale_version = t.version  # snapshot read BEFORE the tear appears
+    # snapshot read BEFORE the tear appears
+    stale_version, meta, _ = t._snapshot()
     _crash_publish(t, t.version + 1, "")
     inc = spark.createDataFrame([(99, 990)], "k int, v int").coalesce(1)
-    staged = t._stage(inc, ["k"])
+    staged = t._stage(inc, meta)
     with pytest.raises(TxCorruption):
         t._commit(staged, read_version=stale_version)
 
