@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .textops import base_hash48
 
 SAMPLE_BUCKETS = 10_000
@@ -64,7 +65,7 @@ def stratified_sample(df: DataFrame, rates: dict[tuple[str, ...], float],
     rate_rows = [(*key, int(round(rate * SAMPLE_BUCKETS)))
                  for key, rate in rates.items()]
     schema = ", ".join(f"{c} string" for c in key_cols) + ", __thr bigint"
-    rdim = spark.createDataFrame(rate_rows, schema=schema)
+    rdim = local_frame(spark, rate_rows, schema)
     default_thr = int(round(default_rate * SAMPLE_BUCKETS))
     return (
         df.join(F.broadcast(rdim), list(key_cols), "left")
@@ -126,8 +127,8 @@ def token_budget_mix(df: DataFrame, budgets: dict[str, int],
 
     spark = SparkSession.getActiveSession() or df.sparkSession
     rows = [(k, int(v)) for k, v in budgets.items()]
-    bdim = spark.createDataFrame(rows, schema=f"{stratum_col} string, "
-                                              "__budget bigint")
+    bdim = local_frame(spark, rows,
+                       f"{stratum_col} string, __budget bigint")
     w = (Window.partitionBy(stratum_col)
          .orderBy(sample_bucket(F.col(id_col), salt), F.col(id_col))
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))

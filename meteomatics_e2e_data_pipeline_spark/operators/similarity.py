@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _dot(a: Column, b: Column) -> Column:
     prod = F.zip_with(a.cast("array<double>"), b.cast("array<double>"),
@@ -1216,7 +1218,8 @@ def mmr_rerank(cands: DataFrame, psim: DataFrame, k: int,
     from pyspark.sql.types import (DoubleType, IntegerType, StructField,
                                    StructType)
     spark = cands.sparkSession
-    sel_df = spark.createDataFrame(
+    sel_df = local_frame(
+        spark,
         [(d, i + 1, float(r), None if m is None else float(m))
          for i, (d, r, m) in enumerate(sel)],
         StructType([StructField(id_col, cands.schema[id_col].dataType,

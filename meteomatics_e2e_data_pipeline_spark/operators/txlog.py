@@ -71,6 +71,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from ..session import local_frame
 from .genexpr import parse_generation_expr
 from .txproto import (BASE_PROTOCOL, COLMAP_PROTOCOL, DV_PROTOCOL,
                       PARTITION_PROTOCOL,
@@ -822,15 +823,14 @@ class TxTable:
         if not parts:
             fs.delete(_jpath(self.spark, staged), True)
             return []
-        reader = self.spark.read
+        # typed by the batch's own schema: no footer-inference job
+        reader = self.spark.read.schema(phys_df.schema)
         if pcols:
-            # partition columns come back from the staged paths, typed
-            # by the batch's own schema. _file is the RELATIVE staged
-            # path: partitionBy reuses part numbers across partition
-            # directories, so basenames alone would collide and merge
-            # two files' stats.
-            reader = reader.schema(phys_df.schema).option("basePath",
-                                                          staged)
+            # partition columns come back from the staged paths. _file
+            # is the RELATIVE staged path: partitionBy reuses part
+            # numbers across partition directories, so basenames alone
+            # would collide and merge two files' stats.
+            reader = reader.option("basePath", staged)
             file_expr = F.substring_index(
                 F.input_file_name(), f"_staged_{tag}/", -1)
         else:
@@ -2031,8 +2031,8 @@ class TxTable:
         vector, typed from the table schema."""
         fields = {f.name: f for f in schema.fields}
         probe_schema = StructType([fields[c] for c in dv["keyCols"]])
-        return self.spark.createDataFrame(
-            [tuple(k) for k in dv["keys"]], probe_schema)
+        return local_frame(self.spark, [tuple(k) for k in dv["keys"]],
+                           probe_schema)
 
     @staticmethod
     def _live_dvs(live: dict[str, dict]) -> dict[str, dict]:
@@ -2086,7 +2086,7 @@ class TxTable:
                     if all((a.get("partitionValues") or {}).get(c) == v
                            for c, v in partition_values.items())}
         if not live:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self._scan_files(meta, sorted(live),
                                 dvs=self._live_dvs(live))
 
@@ -2180,7 +2180,7 @@ class TxTable:
             rows = list({tuple(r[k] for k in keys): r
                          for r in rows}.values())
         if not live or not rows:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         if len(rows) <= self._BLOOM_PROBE_MAX:
             bounds = {k: (_json_scalar(min((r[k] for r in rows
                                             if r[k] is not None),
@@ -2197,7 +2197,7 @@ class TxTable:
         # probe's own collect, so the DataFrame arg is never touched
         _, cand = self._prune(meta, live, keys, probe, bounds, probe_rows)
         if not cand:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         scan = self._scan_files(meta, cand, dvs=self._live_dvs(live))
         if probe_rows is None:
             return scan.join(probe, on=keys, how="left_semi")
@@ -2213,7 +2213,7 @@ class TxTable:
         valid = [r for r in rows
                  if all(r[k] is not None for k in keys)]
         if not valid:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         # Literals cast to the key schema (ADVICE r14, low): foldable
         # cast(lit) constant-folds to a typed literal, so the predicate
         # still compiles to InSet / pushes into the parquet scan while
@@ -2232,9 +2232,9 @@ class TxTable:
                     [F.col(k) == F.lit(r[k]).cast(dts[k]) for k in keys])
                 for r in valid])
         else:
-            probe = self.spark.createDataFrame(
-                [tuple(r[f.name] for f in key_schema.fields)
-                 for r in valid], key_schema)
+            probe = local_frame(
+                self.spark, [tuple(r[f.name] for f in key_schema.fields)
+                             for r in valid], key_schema)
             return scan.join(probe, on=keys, how="left_semi")
         return scan.filter(pred)
 
@@ -2384,7 +2384,7 @@ class TxTable:
                 .select(*[f.name for f in schema.fields])
                 .withColumn("_change_type", F.lit("delete")))
         if not frames:
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, [], out_schema)
         out = frames[0]
         for fr in frames[1:]:
             out = out.unionByName(fr)
@@ -2562,7 +2562,7 @@ class TxTable:
                         .withColumn("_commit_version",
                                     F.lit(i).cast("long")))
         if not frames:
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, [], out_schema)
         out = frames[0]
         for fr in frames[1:]:
             out = out.unionByName(fr)

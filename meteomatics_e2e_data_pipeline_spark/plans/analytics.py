@@ -32,6 +32,7 @@ from ..functions.keys import surrogate_key, surrogate_key_sql
 from ..functions.strings import slugify, split_part_compat
 from ..operators import quantiles
 from ..operators.dedupe import latest_record_wins
+from ..session import local_frame
 from ..sources.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -3198,8 +3199,8 @@ def q_orders_dv_pointget(spark: SparkSession, sf_dir: str) -> DataFrame:
                             stat_cols=["o_orderkey"],
                             bloom_cols=["o_orderkey"])
         files0 = sorted(t.live_files())
-        t.delete(spark.createDataFrame([(k,) for k in _DV_KEYS],
-                                       "o_orderkey long"),
+        t.delete(local_frame(spark, [(k,) for k in _DV_KEYS],
+                             "o_orderkey long"),
                  ["o_orderkey"], mode="dv")
         # the dv contract, asserted at build: no data file was touched
         assert sorted(t.live_files()) == files0, \
@@ -3561,15 +3562,16 @@ def q_orders_cdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the key and price
         firsts = orders.orderBy("o_orderkey").limit(
             len(_CDF_NEW_KEYS)).collect()
-        new = spark.createDataFrame(
+        new = local_frame(
+            spark,
             [tuple(int(k) if c == "o_orderkey"
                    else (2222.0 if c == "o_totalprice" else r[c])
                    for c in orders.columns)
              for k, r in zip(_CDF_NEW_KEYS, firsts)], orders.schema)
         t.merge_upsert(upd.unionByName(new), ["o_orderkey"],
                        update=True)
-        t.delete(spark.createDataFrame(
-            [(k,) for k in _CDF_DEL_KEYS], "o_orderkey long"),
+        t.delete(local_frame(
+            spark, [(k,) for k in _CDF_DEL_KEYS], "o_orderkey long"),
             ["o_orderkey"])
         try:
             os.rename(build / "orders", base)
@@ -3640,8 +3642,8 @@ def q_orders_cloned_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       dir=tempfile.gettempdir()))
         cl = source.clone(str(build / "orders"))
         src_files = set(source.live_files())
-        cl.delete(spark.createDataFrame(
-            [(k,) for k in _CLONE_DEL_KEYS], "o_orderkey long"),
+        cl.delete(local_frame(
+            spark, [(k,) for k in _CLONE_DEL_KEYS], "o_orderkey long"),
             ["o_orderkey"])
         # the isolation contract, asserted at build: the source's live
         # set is byte-identical after the clone's delete
@@ -3720,8 +3722,8 @@ def _partitioned_orders(spark: SparkSession, sf_dir: str):
                 .filter(F.col("o_orderkey").isin(_PART_ZERO_KEYS))
                 .withColumn("o_totalprice", F.lit(0.0)))
         t.merge_upsert(zero, ["o_orderkey"], update=True)
-        t.delete(spark.createDataFrame([(k,) for k in _PART_DEL_KEYS],
-                                       "o_orderkey long"), ["o_orderkey"])
+        t.delete(local_frame(spark, [(k,) for k in _PART_DEL_KEYS],
+                             "o_orderkey long"), ["o_orderkey"])
         # replaceWhere under the gate: atomically replace ONE partition
         # ('P') with its own rows at doubled price — the daily-reload
         # shape; the oracle emulates it as a second CASE layer

@@ -39,6 +39,7 @@ from ..operators.textops import (
 )
 from ..operators.textops import quality_percentile_filter as textops_qpf
 from ..operators.textops import unigram_logprob as textops_unigram
+from ..session import local_frame
 from ..sources.tables import load_table
 
 # Shared query parameters (mirrored into the generated oracle SQL).
@@ -208,8 +209,8 @@ def q_docs_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs, window-closed-form greedy semantics — hash-matching it proves
     the distributed trainer bit-equals a single-node reference."""
     merges, _ = _bpe_artifacts(spark, sf_dir)
-    return spark.createDataFrame(
-        merges,
+    return local_frame(
+        spark, merges,
         "merge_rank int, left_sym string, right_sym string, "
         "merged string, pair_count bigint")
 
@@ -222,8 +223,8 @@ def q_docs_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup, the corpus is never re-folded."""
     docs = load_table(spark, sf_dir, "documents")
     _, vocab_rows = _bpe_artifacts(spark, sf_dir)
-    vocab = spark.createDataFrame(
-        vocab_rows, "word string, cnt long, syms array<string>")
+    vocab = local_frame(
+        spark, vocab_rows, "word string, cnt long, syms array<string>")
     return bpe.bpe_segment_counts(docs, vocab)
 
 
@@ -721,8 +722,8 @@ def q_docs_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream; per-lang work is one map-side-combinable aggregate."""
     docs = load_table(spark, sf_dir, "documents")
     _, vocab_rows = _bpe_artifacts(spark, sf_dir)
-    vocab = spark.createDataFrame(
-        vocab_rows, "word string, cnt long, syms array<string>")
+    vocab = local_frame(
+        spark, vocab_rows, "word string, cnt long, syms array<string>")
     seg = vocab.select("word", F.size("syms").cast("long").alias("n_sub"))
     tok = docs.select("lang", F.explode(tokens(F.col("text"))).alias("word"))
     return (tok.join(F.broadcast(seg), "word")
@@ -1837,8 +1838,9 @@ def _trained_centroids(spark: SparkSession, sf_dir: str,
         _CENTROID_CACHE[key] = [
             (int(r["centroid_id"]), [float(x) for x in r["embedding"]])
             for r in trained.collect()]
-    return spark.createDataFrame(
-        _CENTROID_CACHE[key], "centroid_id int, embedding array<double>")
+    return local_frame(
+        spark, _CENTROID_CACHE[key],
+        "centroid_id int, embedding array<double>")
 
 
 def q_emb_ann_ivf_trained(spark: SparkSession, sf_dir: str,
@@ -2248,8 +2250,8 @@ def _prior_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         _PRIOR_LABEL_CACHE[key] = [
             (int(r["doc_id"]), int(r["cluster_id"]), bool(r["is_canonical"]))
             for r in prev.collect()]
-    return spark.createDataFrame(
-        _PRIOR_LABEL_CACHE[key],
+    return local_frame(
+        spark, _PRIOR_LABEL_CACHE[key],
         "doc_id long, cluster_id long, is_canonical boolean")
 
 
@@ -3940,8 +3942,8 @@ def _trained_pq_codebook(spark: SparkSession, sf_dir: str,
         _PQ_CODEBOOK_CACHE[key] = [
             (int(r["cid"]), [float(x) for x in r["cvec"]])
             for r in cb.collect()]
-    return spark.createDataFrame(
-        _PQ_CODEBOOK_CACHE[key], "cid int, cvec array<double>")
+    return local_frame(
+        spark, _PQ_CODEBOOK_CACHE[key], "cid int, cvec array<double>")
 
 
 def _trained_pq_recon(spark: SparkSession, sf_dir: str,

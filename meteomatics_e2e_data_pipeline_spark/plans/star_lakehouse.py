@@ -60,11 +60,11 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ..operators.dedupe import latest_record_wins
 from ..operators.incremental import new_files_only
 from ..operators.txlog import TxTable
+from ..session import local_frame
 from ..sources.bronze import read_bronze
 from .weather import (
     AS_OF,
@@ -137,10 +137,6 @@ class WeatherStar:
         return self.agg_city_daily.last_txn(_ROLLUP_APP) or 0
 
 
-def _empty(spark: SparkSession, ddl: str) -> DataFrame:
-    return spark.createDataFrame([], StructType.fromDDL(ddl))
-
-
 def create_weather_star(spark: SparkSession, root: str) -> WeatherStar:
     """Create (or reopen) the star's tables under ``root``. All tables
     carry key stats so every fold's probes and rewrites prune.
@@ -161,7 +157,7 @@ def create_weather_star(spark: SparkSession, root: str) -> WeatherStar:
         try:
             return TxTable(spark, path)
         except ValueError:
-            return TxTable.create(spark, _empty(spark, ddl), path,
+            return TxTable.create(spark, local_frame(spark, [], ddl), path,
                                   stat_cols=list(stats),
                                   partition_cols=list(parts))
 

@@ -9,13 +9,18 @@ Centralizes the configuration the whole engine depends on:
   partition count is always wrong somewhere; AQE re-plans per stage.
 - shuffle partitions sized for the local harness via env; on a real cluster
   this is overridden per-deploy (or left to AQE's coalescing).
+- Driver-held rows become a frame through :func:`local_frame` only. A
+  ``createDataFrame`` of a Python list is a ``PythonRDD``: every job that
+  reads it starts Python workers, even when no UDF runs. ``local_frame``
+  keeps the rows in the JVM, so a pipeline without UDFs starts none.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(app_name: str = "meteomatics_e2e_data_pipeline_spark",
@@ -43,3 +48,32 @@ def get_spark(app_name: str = "meteomatics_e2e_data_pipeline_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: StructType | str) -> DataFrame:
+    """A frame over driver-held ``rows`` (tuples, matched to the fields
+    by position) typed by ``schema`` (a StructType or a DDL string),
+    built without a ``PythonRDD``:
+
+    - non-empty rows go to the JVM as one Arrow table and plan as a
+      ``LocalRelation``;
+    - empty rows become an ``emptyRDD`` frame: zero partitions, so it
+      runs no task. An empty ``LocalRelation`` would let Catalyst prune
+      the plans it feeds (an anti-join against it, say), which changes
+      how a write downstream is partitioned.
+
+    Values come back as ``createDataFrame(rows, schema)`` would return
+    them. Naive datetimes are read as UTC, which matches that path under
+    the session's UTC pin (``get_spark``)."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not rows:
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type)
+         for i, f in enumerate(arrow)], schema=arrow), schema)

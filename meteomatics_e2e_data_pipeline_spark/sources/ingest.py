@@ -30,6 +30,7 @@ from collections.abc import Callable, Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .bronze import RAW_WEATHER_SCHEMA
 from .fixtures import LOCATIONS, _payload
 
@@ -205,9 +206,9 @@ def geocode_locations(spark: SparkSession, location_names: list[str],
         city, country = slug_location(name)
         lat, lon = fn(name)
         rows.append((name, city, country, float(lat), float(lon)))
-    return spark.createDataFrame(
-        rows, "location_name string, city string, country string, "
-              "latitude double, longitude double")
+    return local_frame(
+        spark, rows, "location_name string, city string, country string, "
+                     "latitude double, longitude double")
 
 
 # --------------------------------------------------------------------------
@@ -215,28 +216,36 @@ def geocode_locations(spark: SparkSession, location_names: list[str],
 # --------------------------------------------------------------------------
 
 
-def validate_payloads(spark: SparkSession, raw_json: DataFrame,
-                      json_col: str = "raw") -> tuple[DataFrame, DataFrame]:
-    """Split raw JSON strings into (valid, quarantine).
+def _parse_payloads(raw_json: DataFrame, json_col: str) -> DataFrame:
+    """``raw_json`` plus its strict parse ``p`` and the boolean verdict
+    ``_ok`` (never NULL: an unparsed payload is not ok).
 
     Validity = parses under the strict schema AND carries the fields the
     pydantic model requires (city, country, weather.data non-null — the
     reference raises on exactly these, ``helper_validate_response.py:36-43``).
-    Quarantined rows keep the original payload for replay/debugging.
     """
-    parsed = raw_json.withColumn(
-        "p", F.from_json(F.col(json_col), RAW_WEATHER_SCHEMA,
-                         {"mode": "PERMISSIVE"}))
-    ok = (F.col("p").isNotNull()
-          & F.col("p.city").isNotNull()
-          & F.col("p.country").isNotNull()
-          & F.col("p.weather").isNotNull()
-          & F.col("p.weather.data").isNotNull()
-          & (F.size("p.weather.data") > 0))
+    return (raw_json
+            .withColumn("p", F.from_json(F.col(json_col), RAW_WEATHER_SCHEMA,
+                                         {"mode": "PERMISSIVE"}))
+            .withColumn("_ok", F.col("p").isNotNull()
+                        & F.col("p.city").isNotNull()
+                        & F.col("p.country").isNotNull()
+                        & F.col("p.weather").isNotNull()
+                        & F.col("p.weather.data").isNotNull()
+                        & (F.size("p.weather.data") > 0)))
+
+
+def validate_payloads(spark: SparkSession, raw_json: DataFrame,
+                      json_col: str = "raw") -> tuple[DataFrame, DataFrame]:
+    """Split raw JSON strings into (valid, quarantine) by the verdict of
+    :func:`_parse_payloads`. Quarantined rows keep the original payload
+    for replay/debugging.
+    """
+    parsed = _parse_payloads(raw_json, json_col)
     # both channels derive from the SAME parse — the from_json is the
     # dominant per-row cost, so it runs once, not once per branch
-    valid = parsed.filter(ok).select("p.*")
-    quarantine = (parsed.filter(~ok | F.col("p").isNull())
+    valid = parsed.filter("_ok").select("p.*")
+    quarantine = (parsed.filter(~F.col("_ok"))
                   .select(F.col(json_col).alias("corrupt_record")))
     return valid, quarantine
 
@@ -371,17 +380,18 @@ def ingest(spark: SparkSession, run_date: str, bronze_root: str,
         fetch(r["city"], r["country"], r["latitude"], r["longitude"], run_date)
         for r in geo.collect()
     ]
-    raw = spark.createDataFrame([(json.dumps(p),) for p in payloads],
-                                "raw string")
-    valid, quarantine = validate_payloads(spark, raw)
-    n_q = quarantine.count()
+    raw = local_frame(spark, [(i, json.dumps(p))
+                              for i, p in enumerate(payloads)],
+                      "pos int, raw string")
+    # one job parses every payload once: its verdict, by position (the
+    # list is small: 1/location)
+    ok = dict(_parse_payloads(raw, "raw").select("pos", "_ok").collect())
+    good = [p for i, p in enumerate(payloads) if ok[i]]
+    n_q = len(payloads) - len(good)
     if quarantine_root and n_q:
+        _, quarantine = validate_payloads(spark, raw)
         quarantine.write.mode("append").json(
             f"{quarantine_root}/run_date={run_date}")
-    # keep only payloads that passed validation (list is small: 1/location)
-    valid_keys = {(r["city"], r["country"]) for r in
-                  valid.select("city", "country").collect()}
-    good = [p for p in payloads if (p["city"], p["country"]) in valid_keys]
     write_bronze_files(good, run_date, bronze_root)
     return len(good), n_q
 
@@ -458,8 +468,6 @@ def stream_ingest_to_txlog(spark: SparkSession, table_path: str,
     ``None`` — callers decide whether a failed run is retryable; the
     table is consistent either way.
     """
-    from pyspark.sql.types import StructType
-
     from ..operators.txlog import TxTable
     from .api_datasource import register
 
@@ -469,8 +477,7 @@ def stream_ingest_to_txlog(spark: SparkSession, table_path: str,
     except ValueError:
         TxTable.create(
             spark,
-            spark.createDataFrame([], StructType.fromDDL(
-                STAGE_READING_SCHEMA)),
+            local_frame(spark, [], STAGE_READING_SCHEMA),
             table_path, stat_cols=["city", "run_date"])
 
     def sink(batch: DataFrame, batch_id: int) -> None:

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .plans.weather import flatten_bronze
+from .session import local_frame
 from .sources.bronze import RAW_WEATHER_SCHEMA
 
 # (session → {events glob → footer ts dtype}) — WeakKeyDictionary so a
@@ -480,7 +481,7 @@ def stream_stratified_sample(stream: DataFrame,
     rate_rows = [(*key, int(round(rate * SAMPLE_BUCKETS)))
                  for key, rate in rates.items()]
     schema = ", ".join(f"{c} string" for c in key_cols) + ", __thr bigint"
-    rdim = spark.createDataFrame(rate_rows, schema=schema)
+    rdim = local_frame(spark, rate_rows, schema)
     default_thr = int(round(default_rate * SAMPLE_BUCKETS))
     out_cols = stream.columns
     return (

@@ -211,6 +211,49 @@ def _heavy_test_rollup_maintained_from_fact_cdc(spark, tmp_path):
         _ms(sl._rollup_state(fact.read()))
 
 
+def test_star_cycle_builds_no_python_row_frames(spark, tmp_path,
+                                               monkeypatch):
+    """Lock-in for the daily cycle's driver-held frames: every one goes
+    through ``session.local_frame``, so a cycle with no UDF starts no
+    Python worker. ``createDataFrame`` of a Python list or tuple raises
+    here (on this test's thread only: pooled bodies keep running
+    concurrently) while one ``ingest`` with a quarantined payload and
+    one compacting ``run_star_pipeline`` cycle run."""
+    import threading
+
+    from pyspark.sql import SparkSession
+
+    from meteomatics_e2e_data_pipeline_spark.sources.ingest import (
+        FixtureFetcher, ingest)
+
+    create = SparkSession.createDataFrame
+    me = threading.get_ident()
+
+    def no_python_rows(self, data, *args, **kwargs):
+        if threading.get_ident() == me and isinstance(data, (list, tuple)):
+            raise AssertionError(
+                "Python-row frame on the star path: use local_frame")
+        return create(self, data, *args, **kwargs)
+
+    def fetch(city, country, lat, lon, run_date):
+        p = FixtureFetcher()(city, country, lat, lon, run_date)
+        if city == "berlin":
+            del p["weather"]["data"]
+        return p
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_python_rows)
+    bronze, quarantine = tmp_path / "bronze", tmp_path / "quarantine"
+    assert ingest(spark, "2025-03-27", str(bronze), fetcher=fetch,
+                  quarantine_root=str(quarantine)) == (2, 1)
+    assert list(quarantine.glob("run_date=2025-03-27/*.json"))
+    sroot = str(tmp_path / "star")
+    applied = sl.run_star_pipeline(
+        spark, sroot, f"{bronze}/*/*/weather_raw_*.json", optimize_every=1)
+    star = sl.create_weather_star(spark, sroot)
+    assert applied == star.stg.version > 0
+    assert star.dim_location.read().count() == 2
+
+
 # ---------------------------------------------------------------------------
 # Pooled heavy bodies (runtime-budget lever; see conftest.pool_bodies):
 # independent bodies run concurrently under one module fixture, each

@@ -345,9 +345,9 @@ def test_keyed_dml_spark_job_counts(spark, tmp_path):
             "read_keys_count",
             lambda t: t.read_keys(kv(10, 20).select("k"), ["k"]).count()),
     }
-    assert counts == {"merge_insert_only": 8, "merge_update": 10,
-                      "delete_cow": 10, "apply_changes": 18,
-                      "apply_delta": 11, "read_keys_count": 3}
+    assert counts == {"merge_insert_only": 7, "merge_update": 9,
+                      "delete_cow": 9, "apply_changes": 17,
+                      "apply_delta": 10, "read_keys_count": 3}
 
 
 def test_update_rewrites_only_matching_files_and_cdc_nets_changed_rows(
