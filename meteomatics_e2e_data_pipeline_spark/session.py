@@ -12,7 +12,9 @@ Centralizes the configuration the whole engine depends on:
 - Driver-held rows become a frame through :func:`local_frame` only. A
   ``createDataFrame`` of a Python list is a ``PythonRDD``: every job that
   reads it starts Python workers, even when no UDF runs. ``local_frame``
-  keeps the rows in the JVM, so a pipeline without UDFs starts none.
+  turns non-empty rows into a ``LocalRelation`` and empty rows into a
+  zero-partition frame that runs no task, so a pipeline without UDFs
+  starts no worker.
 """
 
 from __future__ import annotations
@@ -54,18 +56,22 @@ def local_frame(spark: SparkSession, rows: list[tuple],
                 schema: StructType | str) -> DataFrame:
     """A frame over driver-held ``rows`` (tuples, matched to the fields
     by position) typed by ``schema`` (a StructType or a DDL string),
-    built without a ``PythonRDD``:
+    that starts no Python worker:
 
     - non-empty rows go to the JVM as one Arrow table and plan as a
       ``LocalRelation``;
-    - empty rows become an ``emptyRDD`` frame: zero partitions, so it
-      runs no task. An empty ``LocalRelation`` would let Catalyst prune
-      the plans it feeds (an anti-join against it, say), which changes
-      how a write downstream is partitioned.
+    - empty rows become an ``emptyRDD`` frame. It has zero partitions,
+      so it runs no task and starts no worker. An empty
+      ``LocalRelation`` would let Catalyst prune the plans it feeds (an
+      anti-join against it, say), which changes how a write downstream
+      is partitioned.
 
     Values come back as ``createDataFrame(rows, schema)`` would return
-    them. Naive datetimes are read as UTC, which matches that path under
-    the session's UTC pin (``get_spark``)."""
+    them: each value that needs it passes through the field type's
+    ``toInternal`` first, as on that path. So a naive ``timestamp``
+    value is read in the Python process's local time zone (``mktime``),
+    whatever the session time zone, and a ``timestamp_ntz`` one as
+    UTC."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     if not rows:
@@ -74,6 +80,11 @@ def local_frame(spark: SparkSession, rows: list[tuple],
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow = to_arrow_schema(schema)
-    return spark.createDataFrame(pa.Table.from_arrays(
-        [pa.array([r[i] for r in rows], type=f.type)
-         for i, f in enumerate(arrow)], schema=arrow), schema)
+    cols = []
+    for i, (f, af) in enumerate(zip(schema.fields, arrow)):
+        vals = [r[i] for r in rows]
+        if f.dataType.needConversion():
+            vals = [f.dataType.toInternal(v) for v in vals]
+        cols.append(pa.array(vals, type=af.type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(cols, schema=arrow), schema)

@@ -128,12 +128,58 @@ def _heavy_test_star_fold_is_exactly_once_across_crash_and_bounded_catchup(
     assert star.applied_version == star.stg.version
     _assert_star_equals_batch(spark, star)
 
+
+def _no_python_row_frames(body):
+    """Run ``body`` with ``createDataFrame`` of a Python list or tuple
+    raising on the calling thread: the daily cycle's driver-held frames
+    must go through ``session.local_frame``, so a cycle with no UDF
+    starts no Python worker. Other threads (the pooled bodies running
+    alongside) pass through to the real method."""
+    import threading
+
+    from pyspark.sql import SparkSession
+
+    create = SparkSession.createDataFrame
+    me = threading.get_ident()
+
+    def no_python_rows(self, data, *args, **kwargs):
+        if threading.get_ident() == me and isinstance(data, (list, tuple)):
+            raise AssertionError(
+                "Python-row frame on the star path: use local_frame")
+        return create(self, data, *args, **kwargs)
+
+    SparkSession.createDataFrame = no_python_rows
+    try:
+        body()
+    finally:
+        SparkSession.createDataFrame = create
+
+
 def _heavy_test_run_star_pipeline_cycles_with_compaction(spark, tmp_path):
     """The one-call cycle (ingest -> fold -> OPTIMIZE -> dbt-equivalent
     checks): two cycles with per-version compaction still equal the
     batch rebuild — compaction's layout-only commits are invisible to
     the maintenance floor — and a replayed cycle ingests and folds
-    nothing."""
+    nothing. The API ingest (with one quarantined payload) and the
+    cycles build no Python-row frame (``_no_python_row_frames``)."""
+    _no_python_row_frames(
+        lambda: _star_pipeline_cycles_with_compaction(spark, tmp_path))
+
+
+def _star_pipeline_cycles_with_compaction(spark, tmp_path):
+    from meteomatics_e2e_data_pipeline_spark.sources.ingest import (
+        FixtureFetcher, ingest)
+
+    def fetch(city, country, lat, lon, run_date):
+        p = FixtureFetcher()(city, country, lat, lon, run_date)
+        if city == "berlin":
+            del p["weather"]["data"]
+        return p
+
+    bronze, quarantine = tmp_path / "bronze", tmp_path / "quarantine"
+    assert ingest(spark, "2025-03-27", str(bronze), fetcher=fetch,
+                  quarantine_root=str(quarantine)) == (2, 1)
+    assert list(quarantine.glob("run_date=2025-03-27/*.json"))
     root = ensure_fixtures()
     sroot = str(tmp_path / "star")
     v1 = sl.run_star_pipeline(
@@ -209,49 +255,6 @@ def _heavy_test_rollup_maintained_from_fact_cdc(spark, tmp_path):
     assert star.rollup_applied_version >= v0
     assert _ms(star.agg_city_daily.read()) == \
         _ms(sl._rollup_state(fact.read()))
-
-
-def test_star_cycle_builds_no_python_row_frames(spark, tmp_path,
-                                               monkeypatch):
-    """Lock-in for the daily cycle's driver-held frames: every one goes
-    through ``session.local_frame``, so a cycle with no UDF starts no
-    Python worker. ``createDataFrame`` of a Python list or tuple raises
-    here (on this test's thread only: pooled bodies keep running
-    concurrently) while one ``ingest`` with a quarantined payload and
-    one compacting ``run_star_pipeline`` cycle run."""
-    import threading
-
-    from pyspark.sql import SparkSession
-
-    from meteomatics_e2e_data_pipeline_spark.sources.ingest import (
-        FixtureFetcher, ingest)
-
-    create = SparkSession.createDataFrame
-    me = threading.get_ident()
-
-    def no_python_rows(self, data, *args, **kwargs):
-        if threading.get_ident() == me and isinstance(data, (list, tuple)):
-            raise AssertionError(
-                "Python-row frame on the star path: use local_frame")
-        return create(self, data, *args, **kwargs)
-
-    def fetch(city, country, lat, lon, run_date):
-        p = FixtureFetcher()(city, country, lat, lon, run_date)
-        if city == "berlin":
-            del p["weather"]["data"]
-        return p
-
-    monkeypatch.setattr(SparkSession, "createDataFrame", no_python_rows)
-    bronze, quarantine = tmp_path / "bronze", tmp_path / "quarantine"
-    assert ingest(spark, "2025-03-27", str(bronze), fetcher=fetch,
-                  quarantine_root=str(quarantine)) == (2, 1)
-    assert list(quarantine.glob("run_date=2025-03-27/*.json"))
-    sroot = str(tmp_path / "star")
-    applied = sl.run_star_pipeline(
-        spark, sroot, f"{bronze}/*/*/weather_raw_*.json", optimize_every=1)
-    star = sl.create_weather_star(spark, sroot)
-    assert applied == star.stg.version > 0
-    assert star.dim_location.read().count() == 2
 
 
 # ---------------------------------------------------------------------------
